@@ -1297,15 +1297,10 @@ def main() -> None:
     except Exception as e:
         print(f"# bench warc FAILED: {e}", file=sys.stderr)
 
-    # Full-PSL registered-domain JOIN form vs the curated expression
-    # form on the url_dedup corpus (r11, review r10 item 3): the join
-    # form's shuffle cost is the price of full-PSL coverage — publish
-    # both so the tradeoff is measured. Telemetry only.
+    # Registered-domain keying (curated default ruleset) on the
+    # url_dedup corpus. Telemetry only.
     try:
-        from lantern_spark.operators.weburl import (
-            registered_domain,
-            registered_domain_df,
-        )
+        from lantern_spark.operators.weburl import registered_domain
         from lantern_spark.queries.dedup import synth_url_expr
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -1317,11 +1312,6 @@ def main() -> None:
             registered_domain("url").alias("d")
         ).groupBy().agg(SF.countDistinct("d")).collect()
         quality["rd_expr_form_s"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        registered_domain_df(docs, "url").groupBy().agg(
-            SF.countDistinct("registered_domain")
-        ).collect()
-        quality["rd_join_form_s"] = round(time.time() - t0, 3)
     except Exception as e:
         print(f"# bench registered_domain FAILED: {e}", file=sys.stderr)
 
@@ -1521,7 +1511,7 @@ def main() -> None:
             "apq_topk_score_rmse pq_topk_score_rmse "
             "apq_shortlist100_recall_at10 pq_shortlist100_recall_at10 "
             "wet_ingest_mb_per_s warc_ingest_mb_per_s "
-            "rd_expr_form_s rd_join_form_s "
+            "rd_expr_form_s "
             "pagerank_s pagerank_mass seed_expand_s harmonic_s "
             "harmonic_mean_ball pagerank_storage_ckpt_s "
             "warc_ingest_fast_mb_per_s warc_ingest_fused_mb_per_s"

@@ -8,23 +8,22 @@ so `HTTP://Example.com/a?utm_source=x` and `http://example.com/a`
 collapse.
 
 Spark-first shape: every operator is a PURE column expression
-(whole-stage codegen, map-only at any scale, no UDF) built from
+(map-only at any scale, no UDF) built from
 regexes in the Java∩RE2 dialect — no backreferences, no lookaround —
 so each step replays in DuckDB SQL (pinned in tests/test_weburl.py).
 URL dedup is the exact-dedup discipline (hash-groupBy on the
 normalized key, never content); blocklist filtering broadcasts.
 
 Scope notes (documented approximations):
-- ``registered_domain`` defaults (r10) to a BUNDLED curated subset of
-  the Public Suffix List (``data/public_suffix_list.dat``, ~1.1k
+- ``registered_domain`` defaults to a BUNDLED curated subset of the
+  Public Suffix List (``data/public_suffix_list.dat``, ~1.1k
   multi-label rules: ICANN second-level registries incl. JP
   wildcard/exception city rules and the US state hierarchy, plus the
   web-corpus private suffixes — blogspot.com, github.io, …); pass
-  ``psl=load_psl(path_to_public_suffix_list.dat)`` to swap in the
-  full downloaded PSL (~9.6k rules) for exotic registries, or
-  ``psl=False`` for the legacy embedded 2-label chain. Rules compile
-  into a JVM-side ``isin`` when-chain at plan time, so workers never
-  need the file.
+  ``psl=path_to_public_suffix_list.dat`` to any keying operator for
+  the full downloaded PSL (~9.6k rules) on exotic registries, or
+  ``psl=False`` for the embedded 2-label list. Rules render into one
+  SQL expression at plan time, so workers never need the file.
 - ``normalize_url`` lowercases scheme+host (case-insensitive by RFC
   3986), preserves path/query case (significant), drops fragments,
   userinfo, default ports, and the common tracking parameters.
@@ -34,7 +33,7 @@ from __future__ import annotations
 
 from typing import Iterable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -43,8 +42,6 @@ __all__ = [
     "surt_key",
     "normalize_url",
     "registered_domain",
-    "registered_domain_df",
-    "psl_rules_df",
     "parse_psl",
     "load_psl",
     "default_psl",
@@ -304,169 +301,24 @@ def load_psl(path: str) -> dict:
         return parse_psl(fh.read())
 
 
-# Memoized built expressions: the PSL when-chain costs ~1.1 s of
-# DRIVER time per build (one py4j literal call per rule), so repeat
-# builds over the same column name must reuse the Column — it is an
-# immutable expression tree, safely shareable across DataFrames of
-# the same JVM. Keyed by (column name, extras, psl source, gateway
-# identity) — a fresh gateway (new JVM) invalidates naturally.
-_RD_EXPR_CACHE: dict = {}
-
-
-def registered_domain(
-    col, extra_suffixes: Iterable[str] = (), psl=None,
-    col_is_host: bool = False,
-) -> Column:
-    """eTLD+1 as a pure column expression (memoized per column name —
-    repeat builds with the same arguments return the same Column
-    object instead of re-paying the ~1.1 s rule-chain construction).
-
-    Default (``psl=None``, r10): the BUNDLED curated PSL subset
-    (:func:`default_psl` — exact + wildcard + exception rules, so
-    ``bbc.co.uk`` → ``bbc.co.uk``; under ``*.nagoya.jp`` the public
-    suffix is ``foo.nagoya.jp`` so ``x.shop.foo.nagoya.jp`` →
-    ``shop.foo.nagoya.jp``; the ``!city.nagoya.jp`` exception keeps
-    ``city.nagoya.jp`` registrable — all with NO arguments, the
-    safe-by-default contract).
-    ``extra_suffixes`` merge in as additional exact rules. If the
-    bundled data file is absent, falls back to the embedded
-    :data:`MULTI_LABEL_SUFFIXES` 2-label chain — also selectable
-    explicitly with ``psl=False`` (the r8/r9 default behavior).
-
-    Full-PSL mode (r9, review r8 item 2): pass ``psl`` as a parsed
-    rule dict (:func:`parse_psl`) or a ``public_suffix_list.dat``
-    path, and the standard PSL algorithm compiles into ONE when-chain
-    of ``isin`` literal sets (JVM-side, no UDF): exception rules win
-    outright (the exception itself is the registered domain), else
-    the longest matching rule (wildcard ``*.base`` counts base+1
-    labels), else the 1-label default.
-
-    Hosts with <2 labels (``localhost``; IPv4 literals are 4 numeric
-    labels and pass through the 2-label rule — screen infrastructure
-    hosts first) return the host unchanged, as does a host that IS a
-    public suffix (no registered domain exists).
-
-    ``col_is_host=True`` treats ``col`` as an already-extracted HOST
-    (lowercased internally) instead of a URL — the rule chain then
-    compiles over a plain attribute rather than embedding the URL
-    regex extraction in every branch. This matters downstream of
-    non-trivial expressions: Catalyst's project collapsing can inline
-    a big upstream chain (e.g. :func:`~lantern_spark.functions.html.
-    resolve_link`) into every branch of the rule CASE, inflating the
-    generated code past janino's limits (r12: domain_link_graph's
-    per-run ~13 s failed-compile penalty)."""
-    # Materialize up front: a generator would be exhausted by the
-    # cache-key tuple() below and then build (and poison the cache
-    # with) a chain missing every extra rule.
-    extra_suffixes = tuple(extra_suffixes)
-    # Resolve the ruleset FIRST so the cache key names the actual
-    # rules (id of the parsed dict — stable because default_psl() is
-    # itself cached; a reloaded/replaced ruleset is a new dict and
-    # misses naturally). String paths are re-read per call (their
-    # contents can change), so they are not memoized.
-    if psl is None:
-        psl = default_psl()
-    cache_key = None
-    if isinstance(col, str) and not isinstance(psl, str):
-        from pyspark import SparkContext
-
-        gw = SparkContext._gateway
-        if gw is not None:
-            rules = ("dict", id(psl)) if isinstance(psl, dict) else psl
-            cache_key = (
-                col, tuple(sorted(extra_suffixes)), rules, id(gw),
-                bool(col_is_host),
-            )
-            hit = _RD_EXPR_CACHE.get(cache_key)
-            if hit is not None:
-                return hit[1]
-    if cache_key is not None:
-        # One-parse fast path (r13, review r12 item 2): the rule chain
-        # renders as a single Spark-SQL CASE string and F.expr hands
-        # it to the JVM parser in ONE py4j call — ~30 ms vs ~1.1 s of
-        # per-literal py4j round trips for the same expression tree
-        # (the memo made REPEAT builds free; this makes the FIRST
-        # build cheap, which was the dominant run-1 constant of
-        # domain_link_graph_edges). Parity with the Column builder is
-        # pinned in tests/test_weburl.py over every PSL tier.
-        out = F.expr(
-            _registered_domain_sparksql(
-                col, extra_suffixes, psl, col_is_host=col_is_host
-            )
-        )
-        # Pin the ruleset dict in the value so its id() is never
-        # recycled onto a different dict while the entry lives.
-        _RD_EXPR_CACHE[cache_key] = (psl, out)
-        return out
-    return _build_registered_domain(
-        col, extra_suffixes, psl, col_is_host=col_is_host
-    )
-
-
-def _build_registered_domain(
-    col, extra_suffixes, psl, col_is_host: bool = False
-) -> Column:
-    host = F.lower(_c(col)) if col_is_host else url_host(col)
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-
-    def lastk(k: int) -> Column:
-        return F.concat_ws(
-            ".", *[F.element_at(labels, -j) for j in range(k, 0, -1)]
-        )
-
+def _ruleset(psl, extra_suffixes=()) -> dict:
+    """The parsed ruleset a ``psl`` argument names, with
+    ``extra_suffixes`` merged in as exact rules (copy-on-write — the
+    shared default ruleset is never mutated). ``None`` is the bundled
+    default; ``False`` (or a missing bundle) is the embedded
+    :data:`MULTI_LABEL_SUFFIXES` list, which is exactly the ruleset of
+    its 2-label exact rules; a string is a ``public_suffix_list.dat``
+    path."""
     if psl is None:
         psl = default_psl()
     if psl is None or psl is False:
-        suffixes = list(MULTI_LABEL_SUFFIXES) + list(extra_suffixes)
-        return (
-            F.when(n <= 1, host)
-            .when((n >= 3) & lastk(2).isin(suffixes), lastk(3))
-            .otherwise(lastk(2))
-        )
-
-    if isinstance(psl, str):
+        psl = {"exact": {2: set(MULTI_LABEL_SUFFIXES)}}
+    elif isinstance(psl, str):
         psl = load_psl(psl)
-    psl = _merge_extras(psl, extra_suffixes)
-    # (guard, result) arms in PSL priority order: exceptions (longest
-    # first), then rules by effective suffix length descending — a
-    # wildcard with base k is a (k+1)-label suffix, tied with exact
-    # (k+1)-label rules (PSL: "the rule with the most labels").
-    arms = []
-    for k in sorted(psl["exception"], reverse=True):
-        arms.append(
-            ((n >= k) & lastk(k).isin(sorted(psl["exception"][k])), lastk(k))
-        )
-    suffix_lens = sorted(
-        {k + 1 for k in psl["wildcard"]} | set(psl["exact"]), reverse=True
-    )
-    for s in suffix_lens:
-        if s - 1 in psl["wildcard"]:
-            wc = sorted(psl["wildcard"][s - 1])
-            arms.append(((n >= s + 1) & lastk(s - 1).isin(wc), lastk(s + 1)))
-            # the host IS inside the wildcard suffix itself
-            arms.append(((n == s) & lastk(s - 1).isin(wc), host))
-        if s in psl["exact"]:
-            ex = sorted(psl["exact"][s])
-            arms.append(((n >= s + 1) & lastk(s).isin(ex), lastk(s + 1)))
-            arms.append(((n == s) & lastk(s).isin(ex), host))
-    out = F.when(n <= 1, host)
-    for guard, result in arms:
-        out = out.when(guard, result)
-    return out.otherwise(lastk(2))
-
-
-def _merge_extras(psl: dict, extra_suffixes) -> dict:
-    """Merge ``extra_suffixes`` into a parsed ruleset as exact rules
-    (copy-on-write — the shared default ruleset is never mutated).
-    Shared by the Column builder and the SQL fast path so the two
-    forms compile the SAME rules by construction."""
-    if not extra_suffixes:
-        return psl
     merged = {
-        "exact": {k: set(v) for k, v in psl["exact"].items()},
-        "wildcard": psl["wildcard"],
-        "exception": psl["exception"],
+        "exact": {k: set(v) for k, v in psl.get("exact", {}).items()},
+        "wildcard": psl.get("wildcard", {}),
+        "exception": psl.get("exception", {}),
     }
     for s in extra_suffixes:
         s = s.strip().lower()
@@ -476,38 +328,30 @@ def _merge_extras(psl: dict, extra_suffixes) -> dict:
     return merged
 
 
-def _registered_domain_sparksql(
-    col_name: str, extra_suffixes, psl, col_is_host: bool = False
-) -> str:
-    """Spark-SQL text of :func:`_build_registered_domain`'s when-chain
-    for a NAMED column — the one-parse fast path. The rendered CASE is
-    structurally the same expression tree the Column builder produces
-    (same arm order, same guards, same In-lists), just constructed by
-    the JVM SQL parser in one call instead of ~4k py4j literal round
-    trips (~30 ms vs ~1.1 s on the bundled ruleset). Parity is pinned
-    tier-by-tier in tests/test_weburl.py; :func:`psl_duckdb_case` is
-    the DuckDB-dialect sibling."""
-    # F.col("a.b") semantics: dot-separated multipart identifier
-    q = ".".join(
-        "`" + part.replace("`", "``") + "`" for part in col_name.split(".")
-    )
-    if col_is_host:
-        host = f"lower({q})"
-    else:
-        # url_host() rendered in SQL (regexes double their backslashes
-        # for the SQL string-literal escape pass)
-        rx = _AUTH_RX.replace("\\", "\\\\").replace("'", "''")
-        host = (
-            "regexp_replace(regexp_replace(lower(regexp_extract("
-            f"trim({q}), '{rx}', 2)), ':[0-9]*$', ''), '\\\\.$', '')"
-        )
-    ls = f"split({host}, '\\\\.')"
-    n = f"size({ls})"
+def _registered_domain_sql(host_sql: str, psl: dict) -> str:
+    """Spark-SQL text of eTLD+1 over the host expression ``host_sql``
+    under the ruleset ``psl`` (a :func:`_ruleset` dict) — the one
+    renderer behind :func:`registered_domain` and the SQL function of
+    :func:`~lantern_spark.sqlapi.install_url_functions`.
+
+    The rule CASE sits inside a lambda that binds the host's label
+    array ``ls`` once: ``element_at(transform(array(split(host)),
+    ls -> CASE … END), 1)``. Binding splits the host once per row
+    instead of once per arm, and the higher-order function keeps the
+    CASE out of whole-stage codegen by construction (it is
+    CodegenFallback), so however many rules the ruleset carries no
+    generated method grows with it — no fences, no exile wrappers.
+    Arms run in PSL priority order: exceptions (the exception itself
+    is the registered domain), then rules by effective suffix length
+    descending (a wildcard ``*.base`` counts base+1 labels), then the
+    2-label default. A host that IS a public suffix, or has <2 labels,
+    comes back unchanged. :func:`psl_duckdb_case` is the independent
+    DuckDB-dialect oracle."""
+    n = "size(ls)"
+    host = "array_join(ls, '.')"
 
     def lastk(k: int) -> str:
-        parts = ", ".join(
-            f"element_at({ls}, -{j})" for j in range(k, 0, -1)
-        )
+        parts = ", ".join(f"element_at(ls, -{j})" for j in range(k, 0, -1))
         return f"concat_ws('.', {parts})"
 
     def inlist(vals) -> str:
@@ -515,18 +359,6 @@ def _registered_domain_sparksql(
             "'" + v.replace("'", "''") + "'" for v in sorted(vals)
         )
 
-    if psl is None:
-        psl = default_psl()
-    if psl is None or psl is False:
-        suffixes = list(MULTI_LABEL_SUFFIXES) + list(extra_suffixes)
-        return (
-            f"CASE WHEN {n} <= 1 THEN {host} "
-            f"WHEN {n} >= 3 AND {lastk(2)} IN ({inlist(suffixes)}) "
-            f"THEN {lastk(3)} ELSE {lastk(2)} END"
-        )
-    if isinstance(psl, str):
-        psl = load_psl(psl)
-    psl = _merge_extras(psl, extra_suffixes)
     arms = []
     for k in sorted(psl["exception"], reverse=True):
         arms.append(
@@ -555,173 +387,74 @@ def _registered_domain_sparksql(
             arms.append(
                 f"WHEN {n} = {s} AND {lastk(s)} IN ({ex}) THEN {host}"
             )
-    body = " ".join(arms)
+    case = (
+        f"CASE WHEN {n} <= 1 THEN {host} {' '.join(arms)} "
+        f"ELSE {lastk(2)} END"
+    )
     return (
-        f"CASE WHEN {n} <= 1 THEN {host} {body} ELSE {lastk(2)} END"
+        f"element_at(transform(array(split({host_sql}, '\\\\.')), "
+        f"ls -> {case}), 1)"
     )
 
 
-def psl_rules_df(spark: SparkSession, psl=None) -> DataFrame:
-    """A parsed PSL as a (tiny) DataFrame of match rules —
-    ``suffix, match_labels, ps_len, is_exception``:
-
-    - exact rule with j labels → matches a host's last-j-labels;
-      public-suffix length j;
-    - wildcard ``*.base`` (base j labels) → matches on the base;
-      public-suffix length j+1 (the ``*`` consumes one host label);
-    - exception ``!rule`` (j labels) → matches the rule; the PUBLIC
-      suffix is the rule minus its leftmost label (ps_len j−1), so
-      the registered domain is the exception rule itself.
-
-    The full ~9.6k-rule PSL is a few hundred KB — trivially
-    broadcastable; this is the scale-correct carrier for
-    :func:`registered_domain_df` (the literal when-chain form stops
-    being practical around 10³ rules: ~1 s of driver py4j per 1.1k)."""
-    if psl is None:
-        psl = default_psl()
-    if isinstance(psl, str):
-        psl = load_psl(psl)
-    if not isinstance(psl, dict):
-        raise ValueError("psl_rules_df needs a parsed PSL dict or path")
-    rows = []
-    for k, rules in psl.get("exact", {}).items():
-        rows += [(r, k, k, False) for r in sorted(rules)]
-    for k, bases in psl.get("wildcard", {}).items():
-        rows += [(b, k, k + 1, False) for b in sorted(bases)]
-    for k, rules in psl.get("exception", {}).items():
-        rows += [(r, k, k - 1, True) for r in sorted(rules)]
-    from lantern_spark.types import local_df
-
-    return local_df(
-        spark,
-        rows or [("", 0, 0, False)],
-        "suffix string, match_labels int, ps_len int, is_exception boolean",
+def _url_host_sql(u: str) -> str:
+    """:func:`url_host` as Spark-SQL text over the SQL expression
+    ``u`` (regexes double their backslashes for the SQL string-literal
+    escape pass)."""
+    rx = _AUTH_RX.replace("\\", "\\\\").replace("'", "''")
+    return (
+        "regexp_replace(regexp_replace(lower(regexp_extract("
+        f"trim({u}), '{rx}', 2)), ':[0-9]*$', ''), '\\\\.$', '')"
     )
 
 
-def registered_domain_df(
-    df: DataFrame,
-    url_col: str,
-    psl=None,
-    out_col: str = "registered_domain",
-    extra_suffixes: Iterable[str] = (),
-) -> DataFrame:
-    """eTLD+1 via a broadcast RULES JOIN instead of a literal
-    when-chain — the FULL-PSL form (r11, review r10 item 3): the
-    expression form's literal ``isin`` sets cost ~1 s of driver py4j
-    per 1.1k rules, which forced a curated-subset default; a rules
-    DataFrame carries all ~9.6k PSL rules at zero plan-size cost, so
-    exotic registries (``*.ck``, ``govt.nz``-class) resolve correctly
-    instead of falling back to the 2-label default.
+def registered_domain(
+    col: str, extra_suffixes: Iterable[str] = (), psl=None,
+    col_is_host: bool = False,
+) -> Column:
+    """eTLD+1 of the URL column named ``col`` as a pure column
+    expression (one SQL parse JVM-side, no UDF; workers never need
+    the rules file).
 
-    Mechanics (one broadcast join + one short-key shuffle):
+    Default (``psl=None``): the BUNDLED curated PSL subset
+    (:func:`default_psl` — exact + wildcard + exception rules, so
+    ``bbc.co.uk`` → ``bbc.co.uk``; under ``*.nagoya.jp`` the public
+    suffix is ``foo.nagoya.jp`` so ``x.shop.foo.nagoya.jp`` →
+    ``shop.foo.nagoya.jp``; the ``!city.nagoya.jp`` exception keeps
+    ``city.nagoya.jp`` registrable — all with NO arguments, the
+    safe-by-default contract).
+    ``extra_suffixes`` merge in as additional exact rules. If the
+    bundled data file is absent, falls back to the embedded
+    :data:`MULTI_LABEL_SUFFIXES` 2-label rules — also selectable
+    explicitly with ``psl=False``.
 
-    1. DISTINCT hosts (crawl URLs repeat hosts heavily — the mapping
-       is computed once per host, not per row);
-    2. each host explodes into its ≤max_rule_labels candidate
-       suffixes (bounded by the deepest rule in the PSL, 5 labels);
-    3. broadcast-join candidates against :func:`psl_rules_df`; the
-       winner per host is (exceptions first, then longest public
-       suffix) — the PSL priority order;
-    4. registered domain = the public suffix plus one host label
-       (the host itself when it IS a public suffix, matching
-       :func:`registered_domain`'s contract), default 2-label rule
-       when nothing matches;
-    5. hosts map back onto rows by one equi-join on the host key.
+    Full PSL: pass ``psl`` as a ``public_suffix_list.dat`` path or a
+    parsed rule dict (:func:`parse_psl`). The ~9.6k-rule list renders
+    in milliseconds into the same expression form (see
+    :func:`_registered_domain_sql` for the algorithm and the codegen
+    shape), so every keying operator takes full-PSL coverage through
+    this one argument.
 
-    Same output contract as the expression form (NULL URL and non-URL
-    values → ``''``, the concat-of-no-labels result); costs a shuffle
-    the map-only expression form doesn't — use this for full-PSL
-    coverage, the expression form for the curated default."""
-    spark = df.sparkSession
-    if psl is None:
-        psl = default_psl()
-    if isinstance(psl, str):
-        psl = load_psl(psl)
-    if not isinstance(psl, dict):
-        raise ValueError("registered_domain_df needs a parsed PSL dict or path")
-    if extra_suffixes:
-        psl = {
-            "exact": {k: set(v) for k, v in psl["exact"].items()},
-            "wildcard": psl["wildcard"],
-            "exception": psl["exception"],
-        }
-        for s in extra_suffixes:
-            s = s.strip().lower()
-            k = s.count(".") + 1
-            if k >= 2:
-                psl["exact"].setdefault(k, set()).add(s)
-    rules = psl_rules_df(spark, psl)
-    maxk = max(
-        [k for k in psl.get("exact", {})]
-        + [k for k in psl.get("wildcard", {})]
-        + [k for k in psl.get("exception", {})]
-        + [1]
-    )
+    Hosts with <2 labels (``localhost``; IPv4 literals are 4 numeric
+    labels and pass through the 2-label rule — screen infrastructure
+    hosts first) return the host unchanged, as does a host that IS a
+    public suffix (no registered domain exists). NULL and non-URL
+    values key to ``''``.
 
-    hosts = (
-        df.select(url_host(url_col).alias("__rd_host"))
-        .where(F.col("__rd_host").isNotNull())
-        .distinct()
+    ``col_is_host=True`` treats ``col`` as an already-extracted HOST
+    (lowercased internally) instead of a URL."""
+    if not isinstance(col, str):
+        raise TypeError(
+            f"registered_domain takes a column name, got {type(col)!r}"
+        )
+    # F.col("a.b") semantics: dot-separated multipart identifier
+    q = ".".join(
+        "`" + part.replace("`", "``") + "`" for part in col.split(".")
     )
-    labels = F.split(F.col("__rd_host"), r"\.")
-    n = F.size(labels)
-    cand = hosts.select(
-        "__rd_host",
-        labels.alias("__labels"),
-        n.alias("__n"),
-        F.explode(
-            F.sequence(F.lit(1), F.least(n, F.lit(int(maxk))))
-        ).alias("__k"),
-    ).select(
-        "__rd_host",
-        "__labels",
-        "__n",
-        "__k",
-        F.concat_ws(
-            ".",
-            F.slice(
-                F.col("__labels"),
-                F.col("__n") - F.col("__k") + 1,
-                F.col("__k"),
-            ),
-        ).alias("__cand"),
+    host = f"lower({q})" if col_is_host else _url_host_sql(q)
+    return F.expr(
+        _registered_domain_sql(host, _ruleset(psl, tuple(extra_suffixes)))
     )
-    matched = cand.join(
-        F.broadcast(rules),
-        (F.col("__cand") == F.col("suffix"))
-        & (F.col("__k") == F.col("match_labels")),
-        "inner",
-    )
-    best = matched.groupBy("__rd_host").agg(
-        F.max(
-            F.struct(
-                F.col("is_exception").cast("int").alias("exc"),
-                F.col("ps_len").alias("ps"),
-            )
-        ).alias("__win")
-    )
-    mapped = hosts.join(best, "__rd_host", "left")
-    mlabels = F.split(F.col("__rd_host"), r"\.")
-    mn = F.size(mlabels)
-    ps = F.coalesce(F.col("__win.ps"), F.lit(1))
-    reg_len = F.least(ps + 1, mn)
-    reg = F.when(mn <= 1, F.col("__rd_host")).otherwise(
-        F.concat_ws(".", F.slice(mlabels, mn - reg_len + 1, reg_len))
-    )
-    mapping = mapped.select(
-        "__rd_host", reg.alias("__rd_out")
-    )
-    out = (
-        df.withColumn("__rd_host", url_host(url_col))
-        .join(mapping, "__rd_host", "left")
-        # NULL host (NULL input) → '' — the expression form's result
-        # for the same row (concat_ws over no labels), so the two
-        # forms are drop-in interchangeable
-        .withColumn(out_col, F.coalesce(F.col("__rd_out"), F.lit("")))
-        .drop("__rd_host", "__rd_out")
-    )
-    return out
 
 
 def psl_duckdb_case(
@@ -737,6 +470,7 @@ def psl_duckdb_case(
     two codegens cannot drift from the Spark chain independently."""
     if isinstance(psl, str):
         psl = load_psl(psl)
+    psl = {t: psl.get(t, {}) for t in ("exact", "wildcard", "exception")}
 
     def lastk(k: int) -> str:
         parts = ", ".join(f"{labels}[-{j}]" for j in range(k, 0, -1))
@@ -860,43 +594,20 @@ def filter_domain_blocklist(
 
     ``blocked_domains`` sized like real blocklists (10³-10⁵ entries)
     compiles into an ``isin`` literal set evaluated JVM-side; for
-    larger lists pass a DataFrame join instead (broadcast) — this
-    helper intentionally takes the common literal path.
-
-    Codegen shape (r13 — found by the janino tripwire on its first
-    run): the PSL rule CASE inside a raw ``df.filter(...)`` lands in
-    a FilterExec predicate, whose generated code is ONE method janino
-    cannot split — the compile failed on every run since the bundled
-    PSL became the default (r10), silently executing interpreted. The
-    membership test therefore evaluates in a FENCED, EXILED projection
-    (standalone ProjectExec, method-splittable codegen — the
-    domain_link_graph mechanism) and the filter tests the materialized
-    boolean; the fence stops predicate pushdown substituting the chain
-    back into the scan filter. Nothing is lost at the scan: a
-    per-row rule CASE was never a pushable parquet predicate."""
+    larger lists use :func:`filter_domain_blocklist_df` (broadcast
+    join) — this helper intentionally takes the common literal path.
+    The filter tests the registered-domain expression directly: its
+    rule CASE never enters generated code (see
+    :func:`_registered_domain_sql`)."""
     entries = [d.lower() for d in blocked_domains]
-    resolved = default_psl() if psl is None else psl
-    if isinstance(resolved, str):
-        resolved = load_psl(resolved)
-    platform = (
-        [e for e in entries if _is_public_suffix(e, resolved)]
-        if isinstance(resolved, dict)
-        else []
-    )
-    dom = registered_domain(url_col, psl=psl)
-    hit = dom.isin(entries)
+    rules = _ruleset(psl)
+    platform = [e for e in entries if _is_public_suffix(e, rules)]
+    hit = registered_domain(url_col, psl=rules).isin(entries)
     if platform:
         legacy = registered_domain(url_col, psl=False)
         host = url_host(url_col)
         hit = hit | legacy.isin(platform) | host.isin(platform)
-    fence = F.rand(17) >= -1.0
-    keyed = df.withColumn("__blk_hit", F.when(fence, _codegen_exile(hit)))
-    cond = (
-        F.col("__blk_hit")
-        if keep_blocked
-        else ~F.coalesce(F.col("__blk_hit"), F.lit(False))
-    )
-    return keyed.filter(cond).drop("__blk_hit")
+    return df.filter(hit if keep_blocked else ~F.coalesce(hit, F.lit(False)))
 
 
 def filter_domain_blocklist_df(
@@ -907,7 +618,6 @@ def filter_domain_blocklist_df(
     domain_col: str = "domain",
     keep_blocked: bool = False,
     psl=None,
-    use_full_psl: bool = False,
 ) -> DataFrame:
     """:func:`filter_domain_blocklist` for BIG lists (10⁶+ entries —
     real URL-reputation feeds): the blocklist is a DataFrame, matching
@@ -925,41 +635,23 @@ def filter_domain_blocklist_df(
     would silently never match rows containing NULLs).
     NULL/unparseable URLs are never 'blocked'.
 
-    ``use_full_psl=True`` derives the PSL probe key through the
-    full-rule join form (:func:`registered_domain_df`) — a blocklist
-    entry under an exotic registry then matches exactly instead of
-    through the 2-label fallback (same coverage tradeoff as
-    :func:`domain_link_graph`)."""
+    ``psl`` names the ruleset of the PSL probe — a downloaded
+    ``public_suffix_list.dat`` path makes a blocklist entry under an
+    exotic registry match exactly instead of through the 2-label
+    fallback."""
     d = F.lower(F.trim(F.col(domain_col)))
     keys = blocked.select(d.alias("__probe")).where(
         F.col("__probe").isNotNull() & (F.col("__probe") != "")
     ).distinct()
-    if use_full_psl:
-        ids = registered_domain_df(
-            df.select(F.col(id_col), F.col(url_col)),
-            url_col,
-            psl=psl,
-            out_col="__rd_full",
+    probe = F.array_distinct(
+        F.array(
+            registered_domain(url_col, psl=psl),
+            registered_domain(url_col, psl=False),
+            url_host(url_col),
         )
-        probe = F.array_distinct(
-            F.array(
-                F.col("__rd_full"),
-                registered_domain(url_col, psl=False),
-                url_host(url_col),
-            )
-        )
-        probe_src = ids
-    else:
-        probe = F.array_distinct(
-            F.array(
-                registered_domain(url_col, psl=psl),
-                registered_domain(url_col, psl=False),
-                url_host(url_col),
-            )
-        )
-        probe_src = df
+    )
     blocked_ids = (
-        probe_src.select(F.col(id_col), F.explode(probe).alias("__probe"))
+        df.select(F.col(id_col), F.explode(probe).alias("__probe"))
         .join(F.broadcast(keys), "__probe", "left_semi")
         .select(id_col)
         .distinct()
@@ -976,7 +668,7 @@ def psl_coverage_report(
     col_is_host: bool = False,
     max_examples: int = 20,
 ) -> dict:
-    """Measure whether ``use_full_psl`` matters for THIS corpus (r13,
+    """Measure whether passing ``psl=`` matters for THIS corpus (r13,
     review r12 item 6): the fraction of distinct hosts whose eTLD+1
     under the bundled curated ruleset differs from their eTLD+1 under
     a fuller ruleset ``psl`` (a parsed dict, or a path to a downloaded
@@ -984,25 +676,23 @@ def psl_coverage_report(
     subset lacks collapse onto WRONG keys — every pipeline keyed on
     the registered domain (URL dedup groups, link-graph nodes,
     blocklist matches, PageRank/harmonic mass) silently merges them.
-    This report turns "should I flip the flag?" into a number.
+    This report turns "should I pass ``psl=``?" into a number.
 
     Returns ``{"n_hosts", "n_diff", "diff_fraction", "examples":
     [(host, curated, full), ...]}``. Cost: ONE distinct-host shuffle
-    over the corpus (host extraction is a map-only expression), the
-    broadcast rules join on the distinct-host relation, and two
+    over the corpus (host extraction is a map-only expression), both
+    keyings as expressions over the distinct-host relation, and two
     bounded actions (one count aggregate + ≤``max_examples`` rows)
     that share the shuffle through a persisted ``keyed`` relation
     (r14, review r13 advice: without the persist, both actions
     re-ran the distinct AND both PSL keyings — the stated cost was
-    half the real one). A NULL key on either side (a host that IS a
-    public suffix keys to NULL) counts as a diff only when the other
-    side is non-NULL (``eqNullSafe``). Cheap enough to run as a
-    pre-flight on a 100 TB corpus sample. Guidance: USAGE.md
-    §registered domains — flip
-    ``use_full_psl=True`` (or pass ``psl=`` everywhere) once
-    ``diff_fraction`` is no longer noise for your keying use
-    (rule of thumb: >1%, or ANY diff when the affected hosts are the
-    corpus you care about)."""
+    half the real one). A NULL key on either side counts as a diff
+    only when the other side is non-NULL (``eqNullSafe``). Cheap
+    enough to run as a pre-flight on a 100 TB corpus sample.
+    Guidance: USAGE.md §registered domains — pass ``psl=`` to every
+    keying operator once ``diff_fraction`` is no longer noise for
+    your keying use (rule of thumb: >1%, or ANY diff when the
+    affected hosts are the corpus you care about)."""
     hosts = (
         df.select(
             (
@@ -1012,23 +702,11 @@ def psl_coverage_report(
         .where(F.col("__h") != "")
         .distinct()
     )
-    # curated default, exiled so the rule CASE never fuses into the
-    # distinct's aggregate stage (the janino-64KB lesson)
-    fence = F.rand(19) >= -1.0
     keyed = hosts.select(
         "__h",
-        F.when(
-            fence,
-            _codegen_exile(registered_domain("__h", col_is_host=True)),
-        ).alias("curated"),
+        registered_domain("__h", col_is_host=True).alias("curated"),
+        registered_domain("__h", psl=psl, col_is_host=True).alias("full"),
     )
-    # full ruleset through the scale-correct join form
-    keyed = registered_domain_df(
-        keyed.withColumn("__surl", F.concat(F.lit("h://"), F.col("__h"))),
-        "__surl",
-        psl=psl,
-        out_col="full",
-    ).select("__h", "curated", "full")
     diff = ~F.col("curated").eqNullSafe(F.col("full"))
     keyed = keyed.persist()
     try:
@@ -1075,7 +753,6 @@ def domain_link_graph(
     html_col: str,
     psl=None,
     drop_self_edges: bool = True,
-    use_full_psl: bool = False,
 ) -> DataFrame:
     """The crawl's registered-domain LINK GRAPH in one pass:
     ``(src_domain, dst_domain, n_links)`` edges from raw pages —
@@ -1093,25 +770,22 @@ def domain_link_graph(
     expressions fused into the page scan; the first shuffle counts
     (src_host, dst_host) pairs — edge-key cardinality, not page or
     link cardinality — and the PSL rule chain then runs ONCE per
-    distinct HOST (a fenced, exiled map joined back), before a tiny
+    distinct HOST (a host map joined back), before a tiny
     re-aggregation onto the domain key. The r11 shape — full resolve
     chain + rule CASE inlined per link into the fused aggregate —
     blew janino's 64 KB method limit, so every run paid ~13 s of
     doomed compilation before interpreted fallback (11.5 s → 1.4 s
     steady at sf0.01 with this shape; see _codegen_exile and the
-    in-function fence comments for the three mechanisms).
+    in-function fence comments for the host-chain mechanisms).
     ``drop_self_edges`` removes intra-domain navigation (the bulk of
     raw edges, rarely wanted in a quality prior).
 
-    ``use_full_psl=True`` keys BOTH graph ends through the full
-    ~9.6k-rule PSL join form (:func:`registered_domain_df`) instead
-    of the curated-subset expression: on a real crawl, hosts under
-    non-curated registries otherwise collapse onto wrong graph nodes
-    (everything under a ``*.ck``-class registry becomes ONE node),
-    skewing PageRank and seed expansion (r11 review nit 2). Costs two
-    host-key joins the expression form doesn't — the graph's node
-    identity is the partition key of everything downstream, so buy
-    coverage here when the corpus has registry diversity."""
+    ``psl`` keys BOTH graph ends: pass a downloaded
+    ``public_suffix_list.dat`` path on a registry-diverse crawl —
+    under the curated default, hosts under non-curated registries
+    collapse onto wrong graph nodes (everything under a
+    ``*.ck``-class registry becomes ONE node), skewing PageRank and
+    seed expansion (r11 review nit 2)."""
     from lantern_spark.functions.html import html_links, link_host
 
     # The explode's input is fenced (non-deterministic no-op) so
@@ -1171,95 +845,50 @@ def domain_link_graph(
     from lantern_spark.plans.lineage import cut_lineage
 
     pairs = cut_lineage(pairs, eager=False)
-    if use_full_psl:
-        # registered_domain_df keys on a URL column — rebuild a
-        # minimal one from the host ('h://' + host extracts back to
-        # the host); the join form dedupes hosts internally.
-        keyed = registered_domain_df(
-            pairs.withColumn(
-                "__surl", F.concat(F.lit("h://"), F.col("__sh"))
+    # DISTINCT-HOST → domain map, joined back onto the pairs: the rule
+    # CASE evaluates once per distinct host, in its own small stage.
+    hmap = (
+        pairs.select(F.explode(F.array("__sh", "__dh")).alias("__h"))
+        .distinct()
+        .select(
+            "__h",
+            registered_domain("__h", psl=psl, col_is_host=True).alias(
+                "__d"
             ),
-            "__surl",
-            psl=psl,
-            out_col="src_domain",
         )
-        keyed = registered_domain_df(
-            keyed.withColumn(
-                "__durl", F.concat(F.lit("h://"), F.col("__dh"))
+    )
+    # hmap feeds BOTH ends' joins below; as a plan subtree each
+    # reference re-ran the distinct-host shuffle AND the PSL rule
+    # chain (r14 optimization, guide §2.4) — a lazy cut computes the
+    # map once and shares it by RDD identity.
+    # scheduling_only (r15, r14 ADVICE): under durability modes a
+    # per-call staged copy of the host map would be written (and leak
+    # in storage mode).
+    hmap = cut_lineage(hmap, eager=False, scheduling_only=True)
+    # LEFT joins, deliberately: an inner join would push
+    # isnotnull(__sh/__dh) below the pair aggregation, where the
+    # predicate rewrites to isnotnull(url_host(resolve_link(…))) — two
+    # more full copies of the extraction chain in the fused filter+agg
+    # method, re-breaking the 64 KB limit. The hmap covers every host
+    # by construction, and null-key rows fall to the ''-domain filter
+    # below exactly as before.
+    edges = (
+        pairs.join(
+            hmap.select(
+                F.col("__h").alias("__sh"), F.col("__d").alias("src_domain")
             ),
-            "__durl",
-            psl=psl,
-            out_col="dst_domain",
+            "__sh",
+            "left",
         )
-        edges = keyed.select("src_domain", "dst_domain", "__n")
-    else:
-        # DISTINCT-HOST → domain map, joined back onto the pairs: the
-        # rule CASE evaluates once per distinct host, in its own
-        # small stage. Inlining it into the pairs projection instead
-        # lets predicate pushdown COPY the whole chain into the fused
-        # filter+aggregate method (the ''-filter and self-edge filter
-        # reference both domains), which blows janino's 64 KB
-        # per-method limit — every run then pays ~13 s of doomed
-        # compilation before interpreted fallback (r12 finding).
-        # the domain column is fenced too: the ''-domain / self-edge
-        # predicates downstream would otherwise rewrite through this
-        # project into Filter(CASE-chain ≠ '') — FilterExec predicates
-        # get no subexpression elimination, so every labels-split
-        # reference in the rule chain becomes its own regex matcher
-        # and the fused distinct+project stage re-breaks 64 KB.
-        dom_fence = F.rand(13) >= -1.0
-        hmap = (
-            pairs.select(
-                F.explode(F.array("__sh", "__dh")).alias("__h")
-            )
-            .distinct()
-            .select(
-                "__h",
-                F.when(
-                    dom_fence,
-                    _codegen_exile(
-                        registered_domain(
-                            "__h", psl=psl, col_is_host=True
-                        )
-                    ),
-                ).alias("__d"),
-            )
+        .join(
+            hmap.select(
+                F.col("__h").alias("__dh"), F.col("__d").alias("dst_domain")
+            ),
+            "__dh",
+            "left",
         )
-        # hmap feeds BOTH ends' joins below; as a plan subtree each
-        # reference re-ran the distinct-host shuffle AND the PSL rule
-        # chain (r14 optimization, guide §2.4) — a lazy cut computes
-        # the map once and shares it by RDD identity.
-        # scheduling_only (r15, r14 ADVICE): under durability modes a
-        # per-call staged copy of the host map would be written (and
-        # leak in storage mode); the codegen fence above keeps the
-        # 64 KB-safe shape either way.
-        hmap = cut_lineage(hmap, eager=False, scheduling_only=True)
-        # LEFT joins, deliberately: an inner join would push
-        # isnotnull(__sh/__dh) below the pair aggregation, where the
-        # predicate rewrites to isnotnull(url_host(resolve_link(…)))
-        # — two more full copies of the extraction chain in the fused
-        # filter+agg method, re-breaking the 64 KB limit. The hmap
-        # covers every host by construction, and null-key rows fall
-        # to the ''-domain filter below exactly as before.
-        edges = (
-            pairs.join(
-                hmap.select(
-                    F.col("__h").alias("__sh"),
-                    F.col("__d").alias("src_domain"),
-                ),
-                "__sh",
-                "left",
-            )
-            .join(
-                hmap.select(
-                    F.col("__h").alias("__dh"),
-                    F.col("__d").alias("dst_domain"),
-                ),
-                "__dh",
-                "left",
-            )
-            .select("src_domain", "dst_domain", "__n")
-        )
+        .select("src_domain", "dst_domain", "__n")
+    )
     edges = edges.where(
         (F.col("src_domain") != "") & (F.col("dst_domain") != "")
     )
@@ -1649,7 +1278,6 @@ def join_domain_prior(
     domain_col: str = "domain",
     score_cols: Optional[Sequence[str]] = None,
     psl=None,
-    use_full_psl: bool = False,
     fill: Optional[float] = None,
     broadcast="auto",
     broadcast_ceiling_bytes: int = JOIN_PRIOR_BROADCAST_CEILING,
@@ -1685,13 +1313,9 @@ def join_domain_prior(
     - ``True`` / ``False``: force / forbid the broadcast hint and skip
       the estimate entirely.
 
-    The domain key evaluates
-    in a fenced, exiled projection (janino discipline; the chain never
-    fuses into a filter or the join). ``use_full_psl=True`` keys
-    through the rules join instead — REQUIRED when the graph itself
-    was built with ``use_full_psl`` (mismatched keying silently drops
-    every host under a non-curated registry; run
-    :func:`psl_coverage_report` to size that risk). Rows with no
+    Key with the SAME ``psl`` the graph was built with (mismatched
+    keying silently drops every host under a non-curated registry;
+    run :func:`psl_coverage_report` to size that risk). Rows with no
     prior (domain absent from the graph) keep NULL scores, or
     ``fill`` when given — dropping them is a curation decision, not a
     join default."""
@@ -1703,19 +1327,9 @@ def join_domain_prior(
     p = prior.select(
         F.col(domain_col).alias("__prior_domain"), *score_cols
     )
-    if use_full_psl:
-        keyed = registered_domain_df(
-            df, url_col, psl=psl, out_col="__prior_domain"
-        )
-    else:
-        fence = F.rand(23) >= -1.0
-        keyed = df.withColumn(
-            "__prior_domain",
-            F.when(
-                fence,
-                _codegen_exile(registered_domain(url_col, psl=psl)),
-            ),
-        )
+    keyed = df.withColumn(
+        "__prior_domain", registered_domain(url_col, psl=psl)
+    )
     if broadcast == "auto":
         est = p.agg(
             F.count("*").alias("n"),

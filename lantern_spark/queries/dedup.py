@@ -405,7 +405,6 @@ def url_dedup_docs(spark, sf_dir):
     normalize → registered-domain → survivor chain (pure column exprs
     in the Java∩RE2 dialect, so the oracle replays every step)."""
     from lantern_spark.operators.weburl import (
-        _codegen_exile,
         normalize_url,
         registered_domain,
         url_dedup,
@@ -419,13 +418,10 @@ def url_dedup_docs(spark, sf_dir):
     survivors = url_dedup(
         docs.withColumn("url", synth_url_expr()), "url", "doc_id"
     )
-    # _codegen_exile: the PSL chain fused with the window-survivor
-    # filter sits at janino's 64 KB edge (intermittent failed-compile
-    # tax, r12) — isolate it in a splittable ProjectExec
     return survivors.select(
         "doc_id",
         normalize_url("url").alias("norm_url"),
-        _codegen_exile(registered_domain("url")).alias("domain"),
+        registered_domain("url").alias("domain"),
     )
 
 

@@ -195,14 +195,13 @@ def install_url_functions(spark: SparkSession, psl=None) -> List[str]:
     one ``SELECT`` away for SQL-first users. All bodies are pure
     SQL-defined expressions built from the SAME regex/rule constants
     the Column operators compile (``weburl._AUTH_RX``,
-    ``TRACKING_PARAMS``, ``_registered_domain_sparksql``), and
-    equality with the Column forms is pinned over a URL zoo in
+    ``TRACKING_PARAMS``, ``_registered_domain_sql``), and equality
+    with the Column forms is pinned over a URL zoo in
     tests/test_sqlapi.py — the two surfaces cannot drift
-    independently. Catalyst inlines SQL-function bodies, so plans stay
-    whole-stage-codegen'd with zero UDF boundary; keep
-    ``registered_domain`` out of raw WHERE clauses on wide chains (the
-    janino 64 KB discipline — key in a projection, filter the
-    materialized column).
+    independently. Catalyst inlines SQL-function bodies, so plans keep
+    zero UDF boundary; ``registered_domain`` is safe anywhere a
+    column is, WHERE clauses included (its rule CASE never enters
+    generated code).
 
     ``psl`` selects the ruleset exactly as
     :func:`~lantern_spark.operators.weburl.registered_domain` does
@@ -210,7 +209,9 @@ def install_url_functions(spark: SparkSession, psl=None) -> List[str]:
     from lantern_spark.operators.weburl import (
         _AUTH_RX,
         TRACKING_PARAMS,
-        _registered_domain_sparksql,
+        _registered_domain_sql,
+        _ruleset,
+        _url_host_sql,
     )
 
     rx = _AUTH_RX.replace("\\", "\\\\").replace("'", "''")
@@ -248,11 +249,7 @@ def install_url_functions(spark: SparkSession, psl=None) -> List[str]:
             "url_scheme", "u STRING", "STRING",
             f"lower(regexp_extract(trim(u), '{rx}', 1))",
         ),
-        _ddl(
-            "url_host", "u STRING", "STRING",
-            f"regexp_replace(regexp_replace({hostport}, ':[0-9]*$', "
-            f"''), '\\\\.$', '')",
-        ),
+        _ddl("url_host", "u STRING", "STRING", _url_host_sql("u")),
         _ddl(
             "normalize_url", "u STRING", "STRING",
             f"IF(url_scheme(u) = '', trim(u), concat(url_scheme(u), "
@@ -266,7 +263,7 @@ def install_url_functions(spark: SparkSession, psl=None) -> List[str]:
         ),
         _ddl(
             "registered_domain", "u STRING", "STRING",
-            _registered_domain_sparksql("u", (), psl, col_is_host=False),
+            _registered_domain_sql("url_host(u)", _ruleset(psl)),
         ),
     ]
     names = []

@@ -129,7 +129,6 @@ def incremental_link_graph_job(
     html_col: str,
     checkpoint_path: str,
     psl=None,
-    use_full_psl: bool = False,
     drop_self_edges: bool = True,
     consolidate_every_fragments: Optional[int] = 32,
     max_files_per_trigger: int = 4,
@@ -188,7 +187,6 @@ def incremental_link_graph_job(
             html_col,
             psl=psl,
             drop_self_edges=drop_self_edges,
-            use_full_psl=use_full_psl,
         )
         edges.write.mode("overwrite").parquet(
             fs.join(

@@ -4,8 +4,9 @@ compilation invisibly — results stayed correct (interpreted
 fallback), every plan-pin test passed, and the only evidence was a
 driver-stderr ERROR line. These tests pin (a) the line-scanning
 machinery itself and (b) the end-to-end contract in a subprocess
-with a fresh JVM: a deliberately re-fused oversized chain MUST trip
-the monitor, and the production link-graph shape (the r12 fix) MUST
+with a fresh JVM: a deliberately fused oversized chain MUST trip
+the monitor, and the production shapes (the r12 link graph, the
+blocklist filter, registered-domain keys up to full-PSL scale) MUST
 stay silent."""
 
 import json
@@ -72,26 +73,29 @@ SUBPROC = textwrap.dedent(
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    from lantern_spark.operators.weburl import registered_domain
+    from lantern_spark.operators.weburl import (
+        normalize_url,
+        registered_domain,
+    )
 
-    # (1) deliberately re-fused oversized chain: four PSL rule chains
-    # concatenated into ONE fused agg key + a filter referencing it —
-    # the shape the r12 fixes exist to prevent. Must trip the monitor.
+    # (1) deliberately fused oversized chain: eight normalize_url regex
+    # chains concatenated into ONE fused agg key + a filter
+    # referencing it — the shape the r12 fixes exist to prevent. Must
+    # trip the monitor.
     df = spark.range(500).select(*[
-        F.concat(F.lit("h"), (F.col("id") % 37).cast("string"),
-                 F.lit(".example.co.uk")).alias(f"u{{i}}")
-        for i in range(4)
+        F.concat(F.lit("https://h"), (F.col("id") % 37).cast("string"),
+                 F.lit(f".example{{i}}.co.uk/p?utm_source=x&a=1")
+                 ).alias(f"u{{i}}")
+        for i in range(8)
     ])
-    key = F.concat(*[
-        registered_domain(f"u{{i}}", col_is_host=True) for i in range(4)
-    ])
+    key = F.concat(*[normalize_url(f"u{{i}}") for i in range(8)])
     bad = df.select(key.alias("d")).where(F.col("d") != "").groupBy(
         "d").count()
     bad.collect()
     bad_hits = mon.advance()
 
-    # (2) the production link-graph shape (fences + exile + host-map
-    # join) over the same rule chain: must be codegen-clean.
+    # (2) the production link-graph shape (fence + host exiles +
+    # host-map join): must be codegen-clean.
     from lantern_spark.operators.weburl import domain_link_graph
     hosts = F.array(F.lit("a.co.uk"), F.lit("b.com"), F.lit("c.net"))
     host = F.element_at(hosts, (F.col("id") % 3).cast("int") + 1)
@@ -106,8 +110,8 @@ SUBPROC = textwrap.dedent(
 
     # (3) filter_domain_blocklist — the r13 tripwire's first real
     # catch: the PSL CASE in a raw FilterExec predicate failed compile
-    # on every run since r10 (interpreted fallback). The exiled-
-    # projection shape must be codegen-clean, platform path included.
+    # on every run since r10 (interpreted fallback). Must be
+    # codegen-clean, platform path included.
     from lantern_spark.operators.weburl import filter_domain_blocklist
     urls = spark.range(300).select(
         F.concat(F.lit("https://sub.dom"),
@@ -116,8 +120,30 @@ SUBPROC = textwrap.dedent(
     filter_domain_blocklist(urls, "url", ["dom13.com", "blogspot.com"]
                             ).count()
     blocklist_hits = mon.advance()
+
+    # (4) registered_domain keyed inside a filter + group-by, four
+    # chains concatenated into one key (the shape that tripped before
+    # the rule CASE moved under a lambda), for the bundled ruleset and
+    # a full-PSL-scale (~9.6k-rule) one: must be codegen-clean.
+    sys.path.insert(0, {tests!r})
+    from conftest import synthetic_psl
+    hosts = spark.range(500).select(*[
+        F.concat(F.lit("h"), (F.col("id") % 37).cast("string"),
+                 F.lit(".r1.zz" if i % 2 else ".example.co.uk"))
+        .alias(f"h{{i}}")
+        for i in range(4)
+    ])
+    for psl in (None, synthetic_psl()):
+        key = F.concat(*[
+            registered_domain(f"h{{i}}", psl=psl, col_is_host=True)
+            for i in range(4)
+        ])
+        hosts.select(key.alias("d")).where(F.col("d") != "").groupBy(
+            "d").count().collect()
+    psl_hits = mon.advance()
     print(json.dumps({{"bad": len(bad_hits), "clean": len(clean_hits),
-                       "blocklist": len(blocklist_hits)}}))
+                       "blocklist": len(blocklist_hits),
+                       "psl": len(psl_hits)}}))
     """
 )
 
@@ -129,7 +155,9 @@ class TestEndToEnd:
     ):
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         log = str(tmp_path / "jvm_stderr.log")
-        script = SUBPROC.format(repo=repo, log=log)
+        script = SUBPROC.format(
+            repo=repo, log=log, tests=os.path.join(repo, "tests")
+        )
         proc = subprocess.run(
             [sys.executable, "-c", script],
             capture_output=True,
@@ -150,4 +178,8 @@ class TestEndToEnd:
         assert result["blocklist"] == 0, (
             f"filter_domain_blocklist regressed to a fused filter "
             f"predicate: {result}"
+        )
+        assert result["psl"] == 0, (
+            f"a registered_domain key tripped the janino monitor: "
+            f"{result}"
         )

@@ -866,10 +866,10 @@ class TestHttpSplitterFuzz:
 
 
 class TestRegisteredDomainFormsAgree:
-    """Property (r11): the full-PSL JOIN form and the literal
-    expression form compute the same eTLD+1 for generated hosts built
-    from real bundled-rule labels mixed with random ones — one
-    batched DataFrame comparison per example set."""
+    """Property (r11): a relational PSL rules JOIN replayed in DuckDB
+    and the registered_domain expression compute the same eTLD+1 for
+    generated hosts built from real bundled-rule labels mixed with
+    random ones — one batched DataFrame comparison per example set."""
 
     @given(
         seeds=st.lists(
@@ -884,11 +884,10 @@ class TestRegisteredDomainFormsAgree:
     )
     @settings(max_examples=10, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
-    def test_join_equals_expression(self, spark, seeds):
+    def test_join_equals_expression(self, spark, psl_oracles, seeds):
         from lantern_spark.operators.weburl import (
             default_psl,
             registered_domain,
-            registered_domain_df,
         )
 
         psl = default_psl()
@@ -915,10 +914,7 @@ class TestRegisteredDomainFormsAgree:
                 "i", registered_domain("u").alias("d")
             ).collect()
         }
-        join = {
-            r.i: r.registered_domain
-            for r in registered_domain_df(df, "u").collect()
-        }
+        join = dict(enumerate(psl_oracles[1](urls, psl)))
         assert join == expr, {
             k: (join[k], expr[k]) for k in expr if join[k] != expr[k]
         }

@@ -605,52 +605,12 @@ class TestPslDuckDbReplay:
         }
 
 
-class TestExprMemoization:
-    def test_default_path_returns_same_column_object(self, spark):
-        import lantern_spark.operators.weburl as W
-
-        c1 = W.registered_domain("url")
-        c2 = W.registered_domain("url")
-        assert c1 is c2  # the ~1.1 s rule-chain build is paid once
-
-    def test_cache_respects_arguments(self, spark):
-        import lantern_spark.operators.weburl as W
-
-        base = W.registered_domain("url")
-        assert W.registered_domain("other_col") is not base
-        assert W.registered_domain("url", extra_suffixes=["x.zz"]) is not base
-        assert W.registered_domain("url", psl=False) is not base
-        # Column (non-str) inputs are never memoized.
-        from pyspark.sql import functions as F
-
-        a = W.registered_domain(F.col("url"))
-        b = W.registered_domain(F.col("url"))
-        assert a is not b
-
-    def test_cache_invalidates_with_ruleset_identity(self, spark):
-        import lantern_spark.operators.weburl as W
-
-        before = W.registered_domain("url")
-        old = list(W._DEFAULT_PSL_CACHE)
-        W._DEFAULT_PSL_CACHE.clear()
-        try:
-            # A reloaded default ruleset is a NEW dict → cache miss,
-            # fresh expression (the bundle-missing fallback test's
-            # scenario: no stale bundled chain can leak through).
-            rebuilt = W.registered_domain("url")
-            assert rebuilt is not before
-        finally:
-            W._DEFAULT_PSL_CACHE.clear()
-            W._DEFAULT_PSL_CACHE.extend(old)
-
-
 class TestSqlFastPathParity:
-    """r13 (review r12 item 2): named-column registered_domain builds
-    render as ONE Spark-SQL CASE handed to the JVM parser (~30 ms)
-    instead of ~4k py4j literal calls (~1.1 s). These tests pin the
-    fast path EQUAL to the Column builder, tier by tier, for every
-    ruleset form — the fast path must be an optimization, never a
-    semantic fork."""
+    """registered_domain renders ONE Spark-SQL expression (the rule
+    CASE under a lambda binding the host's labels) handed to the JVM
+    parser in one call. These tests pin it EQUAL to an independent
+    reference — DuckDB running psl_duckdb_case, the roster oracle's
+    codegen — tier by tier, for every ruleset form."""
 
     HOSTS = [
         "news.bbc.co.uk",          # exact multi-label rule
@@ -670,30 +630,30 @@ class TestSqlFastPathParity:
         None,
     ]
 
-    def _compare(self, spark, fast_col, slow_col, inputs, colname):
+    def _compare(self, spark, psl_oracles, col, inputs, colname, oracle_psl,
+                 host_mode):
         df = spark.createDataFrame(
             [(i, h) for i, h in enumerate(inputs)], f"i long, {colname} string"
         )
-        from pyspark.sql import functions as F  # noqa: F401
-
-        rows = df.select(
-            "i", fast_col.alias("fast"), slow_col.alias("slow")
-        ).collect()
-        bad = [(inputs[r.i], r.fast, r.slow) for r in rows if r.fast != r.slow]
+        got = [
+            r.d for r in sorted(
+                df.select("i", col.alias("d")).collect(), key=lambda r: r.i
+            )
+        ]
+        want = psl_oracles[0](inputs, oracle_psl, host_mode=host_mode)
+        bad = [(v, g, w) for v, g, w in zip(inputs, got, want) if g != w]
         assert bad == [], bad
 
-    def test_host_mode_bundled_psl(self, spark):
+    def test_host_mode_bundled_psl(self, spark, psl_oracles):
         import lantern_spark.operators.weburl as W
 
         self._compare(
-            spark,
+            spark, psl_oracles,
             W.registered_domain("h", col_is_host=True),
-            W._build_registered_domain("h", (), W.default_psl(),
-                                       col_is_host=True),
-            self.HOSTS, "h",
+            self.HOSTS, "h", W.default_psl(), host_mode=True,
         )
 
-    def test_url_mode_bundled_psl(self, spark):
+    def test_url_mode_bundled_psl(self, spark, psl_oracles):
         import lantern_spark.operators.weburl as W
 
         urls = [
@@ -707,56 +667,61 @@ class TestSqlFastPathParity:
             None,
         ]
         self._compare(
-            spark,
-            W.registered_domain("u"),
-            W._build_registered_domain("u", (), W.default_psl()),
-            urls, "u",
+            spark, psl_oracles, W.registered_domain("u"),
+            urls, "u", W.default_psl(), host_mode=False,
         )
 
-    def test_snippet_psl_with_extras(self, spark):
+    def test_snippet_psl_with_extras(self, spark, psl_oracles):
         import lantern_spark.operators.weburl as W
 
         snip = W.load_psl(W.PSL_SNIPPET_PATH)
+        with open(W.PSL_SNIPPET_PATH, encoding="utf-8") as fh:
+            snip_plus = W.parse_psl(fh.read() + "\nmy.suffix\n")
         self._compare(
-            spark,
+            spark, psl_oracles,
             W.registered_domain(
                 "h", extra_suffixes=["my.suffix"], psl=snip,
                 col_is_host=True,
             ),
-            W._build_registered_domain(
-                "h", ("my.suffix",), snip, col_is_host=True
-            ),
             self.HOSTS + ["x.my.suffix", "a.x.my.suffix"], "h",
+            snip_plus, host_mode=True,
         )
 
-    def test_fallback_chain(self, spark):
+    def test_fallback_chain(self, spark, psl_oracles):
         import lantern_spark.operators.weburl as W
 
+        # psl=False is the ruleset of the embedded 2-label list
         self._compare(
-            spark,
+            spark, psl_oracles,
             W.registered_domain("h", psl=False, col_is_host=True),
-            W._build_registered_domain("h", (), False, col_is_host=True),
-            self.HOSTS, "h",
+            self.HOSTS, "h", {"exact": {2: W.MULTI_LABEL_SUFFIXES}},
+            host_mode=True,
         )
 
-    def test_build_is_fast(self, spark):
-        """The point of the fast path: a COLD build (cache-missed via a
-        unique column name) stays two orders of magnitude under the
-        ~1.1 s literal-chain build."""
+    def test_build_is_fast(self, spark, big_psl):
+        """A COLD build stays far under the ~1.1 s per-literal py4j
+        chain build, for the default ruleset, a PSL path string, and a
+        full-PSL-scale (~9.6k-rule) dict. One throwaway build first
+        warms the JVM SQL parser, so the timings measure the build."""
         import time
         import uuid
 
         import lantern_spark.operators.weburl as W
 
-        name = f"col_{uuid.uuid4().hex}"
-        t0 = time.time()
-        W.registered_domain(name, col_is_host=True)
-        assert time.time() - t0 < 0.3
+        W.registered_domain("warm_up", psl=False)
+        for psl in (None, W.BUNDLED_PSL_PATH, big_psl):
+            name = f"col_{uuid.uuid4().hex}"
+            t0 = time.time()
+            W.registered_domain(name, psl=psl, col_is_host=True)
+            assert time.time() - t0 < 0.3, type(psl)
 
     def test_quoting_and_escaping(self, spark):
         """Backtick-worthy column names and quote-bearing rules survive
-        the SQL rendering."""
+        the SQL rendering; Column objects are refused (names only)."""
         import lantern_spark.operators.weburl as W
+
+        with pytest.raises(TypeError):
+            W.registered_domain(F.col("u"))
 
         df = spark.createDataFrame(
             [("x.some'odd.zz",)], ["weird `name`"]
@@ -819,8 +784,7 @@ class TestReviewFixes:
             [Row(url="https://a.b.examplereg.zz/x")]
         )
         got = df.select(col.alias("d")).first().d
-        assert got == "b.examplereg.zz"  # generator not lost to the cache key
-        # and the cache entry is keyed by the materialized extras
+        assert got == "b.examplereg.zz"  # generator extras not lost
         col2 = registered_domain("url", extra_suffixes=["examplereg.zz"])
         got2 = df.select(col2.alias("d")).first().d
         assert got2 == "b.examplereg.zz"
@@ -891,10 +855,12 @@ class TestReviewFixes:
 
 
 class TestRegisteredDomainDf:
-    """Full-PSL eTLD+1 via the broadcast rules JOIN (r11, review r10
-    item 3): must agree with the expression form on every bundled-rule
-    case, resolve registries OUTSIDE the curated subset correctly, and
-    replay in DuckDB SQL with the same rules table."""
+    """Full-PSL eTLD+1 (r11, review r10 item 3): the expression form
+    must agree with an independent relational reference — DuckDB
+    joining candidate suffixes against a rules table — on every
+    bundled-rule case, resolve registries OUTSIDE the curated subset
+    once given the fuller ruleset as ``psl``, and carry that ruleset
+    into the feed-scale blocklist."""
 
     URLS = [
         (0, "https://www.example.com/a"),
@@ -919,23 +885,24 @@ class TestRegisteredDomainDf:
     def _df(self, spark):
         return spark.createDataFrame(self.URLS, "i long, u string")
 
-    def test_agrees_with_expression_form_on_bundled_rules(self, spark):
-        from lantern_spark.operators.weburl import (
-            registered_domain,
-            registered_domain_df,
-        )
+    def _keyed(self, spark, df, **kw):
+        from lantern_spark.operators.weburl import registered_domain
 
-        df = self._df(spark)
-        expr = {
+        return {
             r["i"]: r["d"]
             for r in df.select(
-                "i", registered_domain("u").alias("d")
+                "i", registered_domain("u", **kw).alias("d")
             ).collect()
         }
-        join = {
-            r["i"]: r["registered_domain"]
-            for r in registered_domain_df(df, "u").collect()
-        }
+
+    def test_agrees_with_expression_form_on_bundled_rules(
+        self, spark, psl_oracles
+    ):
+        from lantern_spark.operators.weburl import default_psl
+
+        expr = self._keyed(spark, self._df(spark))
+        want = psl_oracles[1]([u for _, u in self.URLS], default_psl())
+        join = dict(enumerate(want))
         assert join == expr, {
             k: (join[k], expr[k]) for k in expr if join[k] != expr[k]
         }
@@ -943,16 +910,13 @@ class TestRegisteredDomainDf:
     def test_not_in_subset_registry_resolves(self, spark):
         # The JP city third-level rules (aisai.aichi.jp et al.) and
         # the US K-12 hierarchy (pvt.k12.ma.us) are in the FULL PSL
-        # but not the bundled curated subset — the join form carries
-        # them at zero plan cost; the curated expression default
-        # resolves one level too shallow (the coverage gap this
-        # closes).
+        # but not the bundled curated subset — passing the fuller
+        # ruleset as psl= resolves them; the curated default resolves
+        # one level too shallow (the coverage gap psl= closes).
         from lantern_spark.operators.weburl import (
             BUNDLED_PSL_PATH,
             default_psl,
             parse_psl,
-            registered_domain,
-            registered_domain_df,
         )
 
         # self-check: the fixture rules really are outside the subset
@@ -975,28 +939,19 @@ class TestRegisteredDomainDf:
             ],
             "i long, u string",
         )
-        got = {
-            r["i"]: r["registered_domain"]
-            for r in registered_domain_df(df, "u", psl=full).collect()
-        }
-        assert got == {
+        assert self._keyed(spark, df, psl=full) == {
             0: "townsite.aisai.aichi.jp",
             1: "stmarys.pvt.k12.ma.us",
             2: "bbc.co.uk",
         }
         # and the curated expression default indeed lacks the rules:
         # it resolves both one level too shallow
-        shallow = {
-            r["i"]: r["d"]
-            for r in df.select(
-                "i", registered_domain("u").alias("d")
-            ).collect()
-        }
+        shallow = self._keyed(spark, df)
         assert shallow[0] == "aisai.aichi.jp"
         assert shallow[1] == "pvt.k12.ma.us"
 
     def test_blocklist_df_full_psl_probe(self, spark):
-        """use_full_psl on the broadcast blocklist: an entry that IS a
+        """psl= on the broadcast blocklist: an entry that IS a
         registered domain only under a full-PSL rule (townsite.aisai.
         aichi.jp) blocks its subdomain pages exactly; the curated probe
         misses it (its PSL probe resolves to aisai.aichi.jp)."""
@@ -1022,7 +977,7 @@ class TestRegisteredDomainDf:
         kept_full = {
             r.i
             for r in filter_domain_blocklist_df(
-                df, "u", blocked, "i", psl=full, use_full_psl=True
+                df, "u", blocked, "i", psl=full
             ).collect()
         }
         assert kept_full == {1, 2}
@@ -1037,97 +992,26 @@ class TestRegisteredDomainDf:
         assert kept_curated == {0, 1, 2}
 
     def test_extra_suffixes(self, spark):
-        from lantern_spark.operators.weburl import registered_domain_df
-
         df = spark.createDataFrame(
             [(0, "https://shop.example.fake.tld/x")], "i long, u string"
         )
-        got = registered_domain_df(
-            df, "u", extra_suffixes=["fake.tld"]
-        ).first()["registered_domain"]
-        assert got == "example.fake.tld"
+        got = self._keyed(spark, df, extra_suffixes=["fake.tld"])
+        assert got == {0: "example.fake.tld"}
 
-    def test_rules_join_is_broadcast(self, spark):
-        from lantern_spark.operators.weburl import registered_domain_df
-
-        out = registered_domain_df(self._df(spark), "u")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "NestedLoop" not in plan
-
-    def test_duckdb_replay_of_join_algorithm(self, spark, tmp_path):
-        """DuckDB replays the SAME algorithm relationally: explode
+    def test_duckdb_replay_of_join_algorithm(self, spark, psl_oracles):
+        """DuckDB replays the PSL algorithm relationally (explode
         candidate suffixes, join the rules table, winner = (exception,
-        ps_len) max, registered = public suffix + one label."""
-        import duckdb
+        ps_len) max, registered = public suffix + one label) over the
+        snippet ruleset, and the expression form must match it — NULL
+        keys to '' (the expression-form contract)."""
+        from lantern_spark.operators.weburl import PSL_SNIPPET_PATH, load_psl
 
-        from lantern_spark.operators.weburl import (
-            default_psl,
-            psl_rules_df,
-            registered_domain_df,
-        )
-
-        df = self._df(spark)
-        got = {
-            r["i"]: r["registered_domain"]
-            for r in registered_domain_df(df, "u").collect()
-        }
-
-        rules = psl_rules_df(spark, default_psl()).collect()
-        con = duckdb.connect()
-        con.execute(
-            "CREATE TABLE rules(suffix VARCHAR, match_labels INT, "
-            "ps_len INT, is_exception BOOLEAN)"
-        )
-        con.executemany(
-            "INSERT INTO rules VALUES (?, ?, ?, ?)",
-            [(r.suffix, r.match_labels, r.ps_len, r.is_exception)
-             for r in rules],
-        )
-        con.execute(
-            "CREATE TABLE u(i BIGINT, url VARCHAR)"
-        )
-        con.executemany(
-            "INSERT INTO u VALUES (?, ?)", list(self.URLS)
-        )
-        maxk = max(r.match_labels for r in rules)
-        sql = f"""
-        WITH hosts AS (
-          SELECT i, url,
-                 regexp_replace(regexp_replace(lower(
-                   regexp_extract(trim(url),
-                     '^([A-Za-z][A-Za-z0-9+.\\-]*)://(?:[^/@?#]*@)?([^/?#]*)', 2)),
-                   ':[0-9]*$', ''), '\\.$', '') AS host
-          FROM u),
-        lab AS (
-          SELECT *, string_split(host, '.') AS labels,
-                 len(string_split(host, '.')) AS n
-          FROM hosts WHERE host IS NOT NULL),
-        cand AS (
-          SELECT i, host, labels, n, k.k,
-                 array_to_string(labels[n - k.k + 1 : n], '.') AS cand
-          FROM lab, (SELECT unnest(range(1, {maxk} + 1)) AS k) k
-          WHERE k.k <= n),
-        win AS (
-          -- scalar priority key: exceptions beat every rule length
-          -- (ps_len < 1000 always)
-          SELECT i, max_by(ps_len, is_exception::INT * 1000 + ps_len) AS ps
-          FROM cand JOIN rules
-            ON cand.cand = rules.suffix AND cand.k = rules.match_labels
-          GROUP BY i)
-        SELECT lab.i,
-               CASE WHEN n <= 1 THEN host
-                    ELSE array_to_string(
-                      labels[n - least(coalesce(win.ps, 1) + 1, n) + 1 : n], '.')
-               END AS d
-        FROM lab LEFT JOIN win ON lab.i = win.i
-        """
-        want = {r[0]: r[1] for r in con.execute(sql).fetchall()}
+        psl = load_psl(PSL_SNIPPET_PATH)
+        got = self._keyed(spark, self._df(spark), psl=psl)
+        want = psl_oracles[1]([u for _, u in self.URLS], psl)
+        assert got[11] == ""
         for i, u in self.URLS:
-            if u is None:
-                assert got[i] == ""  # expression-form contract
-            else:
-                assert got[i] == want[i], (i, u, got[i], want[i])
+            assert got[i] == want[i], (i, u, got[i], want[i])
 
 
 class TestDomainLinkGraph:
@@ -1179,13 +1063,13 @@ class TestDomainLinkGraph:
             ("example.com", "example.com", 1)
         ]
 
-    def test_use_full_psl_keeps_exotic_registries_distinct(self, spark):
+    def test_full_psl_keeps_exotic_registries_distinct(self, spark):
         """r11 review nit 2: the curated-subset expression collapses
         every host under a non-curated registry onto ONE graph node
         (here: a.aisai.aichi.jp and b.aisai.aichi.jp both become
         'aisai.aichi.jp', so their cross-links degenerate into
-        self-edges). use_full_psl routes both graph ends through the
-        full-PSL join form and keeps the nodes distinct."""
+        self-edges). psl= with the fuller ruleset keys both graph ends
+        and keeps the nodes distinct."""
         from lantern_spark.operators.weburl import (
             BUNDLED_PSL_PATH,
             domain_link_graph,
@@ -1212,11 +1096,11 @@ class TestDomainLinkGraph:
         assert {(r.src_domain, r.dst_domain) for r in kept} == {
             ("aisai.aichi.jp", "aisai.aichi.jp")
         }
-        # full-PSL join form: distinct nodes, real cross edges
+        # fuller ruleset: distinct nodes, real cross edges
         got = {
             (r.src_domain, r.dst_domain): r.n_links
             for r in domain_link_graph(
-                pages, "url", "html", psl=full, use_full_psl=True
+                pages, "url", "html", psl=full
             ).collect()
         }
         assert got == {
@@ -1227,7 +1111,7 @@ class TestDomainLinkGraph:
     def test_plan_shape_r12(self, spark):
         """r12 shape: hosts aggregate to distinct (src_host, dst_host)
         pairs first, the PSL chain runs once per distinct HOST via the
-        fenced+exiled host map, and NO aggregation evaluates a regex
+        host map, and NO aggregation evaluates a regex
         chain in its grouping keys — inlined chains in the fused agg
         method exceeded janino's 64 KB limit, so every r11-shaped run
         paid ~13 s of doomed compilation (11.5 s → 1.4 s measured at
@@ -1342,7 +1226,7 @@ class TestDomainPagerank:
 
 
 class TestPslCoverageReport:
-    """r13 (review r12 item 6): the use_full_psl decision as a
+    """r13 (review r12 item 6): the "should I pass psl=?" decision as a
     measured number — fraction of distinct hosts whose eTLD+1 differs
     between the curated default and a supplied fuller ruleset."""
 
@@ -1443,18 +1327,17 @@ class TestPslCoverageReport:
         import lantern_spark.operators.weburl as W
         from pyspark.sql import functions as F
 
-        real = W.registered_domain_df
+        real = W.registered_domain
 
-        def null_one(df, url_col, psl=None, out_col="rd", **kw):
-            out = real(df, url_col, psl=psl, out_col=out_col, **kw)
-            return out.withColumn(
-                out_col,
-                F.when(
-                    F.col("__h") == "www.example.com", F.lit(None)
-                ).otherwise(F.col(out_col)),
-            )
+        def null_one(col, *args, psl=None, **kw):
+            out = real(col, *args, psl=psl, **kw)
+            if psl is None:  # the curated side stays real
+                return out
+            return F.when(
+                F.col("__h") == "www.example.com", F.lit(None)
+            ).otherwise(out)
 
-        monkeypatch.setattr(W, "registered_domain_df", null_one)
+        monkeypatch.setattr(W, "registered_domain", null_one)
         rep = W.psl_coverage_report(
             self._df(spark), "url", W.parse_psl(self.FULLER)
         )
@@ -1766,10 +1649,40 @@ class TestJoinDomainPrior:
         got = {
             r.doc_id: r.rank
             for r in join_domain_prior(
-                docs, "url", prior, psl=psl, use_full_psl=True
+                docs, "url", prior, psl=psl
             ).collect()
         }
         assert got == {1: 9.0, 2: 5.0}
+
+
+class TestPslKeyedPlansDeterministic:
+    """ROADMAP item 4 (task retries): a retried task must recompute
+    the same rows, so the PSL-keyed plans carry no non-deterministic
+    expression — no rand() fences — over a deterministic input."""
+
+    def test_blocklist_and_prior_plans_are_deterministic(self, spark):
+        from lantern_spark.operators.weburl import (
+            filter_domain_blocklist,
+            join_domain_prior,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "https://spam.blogspot.com/p"), (2, "https://a.bbc.co.uk/")],
+            "doc_id long, url string",
+        )
+        prior = spark.createDataFrame(
+            [("bbc.co.uk", 0.5)], "domain string, rank double"
+        )
+        plans = {
+            "blocklist": filter_domain_blocklist(
+                docs, "url", ["example.com", "blogspot.com"]
+            ),
+            "prior": join_domain_prior(docs, "url", prior),
+        }
+        for name, out in plans.items():
+            opt = out._jdf.queryExecution().optimizedPlan()
+            assert opt.deterministic(), (name, opt.toString()[:2000])
+            assert "rand(" not in opt.toString(), name
 
 
 class TestExpandSeedDomains:
